@@ -197,10 +197,9 @@ case class Int128ProductSum(left: Expression, right: Expression, outScale: Int)
   //   carry = unsigned-overflow bit of that add
   //           = ((aLo & bLo) | ((aLo | bLo) & ~rLo)) >>> 63
   //   rHi   = aHi + (bHi + carry)
-  //   sovf  = ((aHi ^ rHi) & ((bHi + carry) ^ rHi)) < 0   (signed overflow)
-  // `bHi + carry` cannot wrap for per-row products (|pHi| < 2^55, file doc);
-  // in merge it could wrap only when bHi = Long.MaxValue, i.e. a partial
-  // already at the 2^127 edge — 10^4 beyond every caller's guarded range.
+  //   sovf  = ((aHi ^ rHi) & (bHi ^ rHi)) < 0   (signed add-with-carry
+  //           overflow; exact even when bHi + carry wraps, which a merge
+  //           of a partial with bHi = Long.MaxValue can do)
   private def add128(aHi: Expression, aLo: Expression,
                      bHi: Expression, bLo: Expression): (Expression, Expression, Expression) =
     Int128ProductSum.add128(aHi, aLo, bHi, bLo)
@@ -341,8 +340,12 @@ object Int128ProductSum {
       Literal(63))
     val bHiC = Add(bHi, carry, EvalMode.LEGACY)
     val rHi = Add(aHi, bHiC, EvalMode.LEGACY)
+    // add-with-carry overflow: aHi + bHi + carry (carry in {0, 1}) overflows
+    // iff aHi and bHi share a sign that rHi lacks. Testing bHi, not bHiC,
+    // also covers bHi = Long.MaxValue with a carry, where bHiC wraps to
+    // Long.MinValue and a test on it would read the overflow backwards.
     val sovf = LessThan(
-      BitwiseAnd(BitwiseXor(aHi, rHi), BitwiseXor(bHiC, rHi)), Literal(0L))
+      BitwiseAnd(BitwiseXor(aHi, rHi), BitwiseXor(bHi, rHi)), Literal(0L))
     (rHi, rLo, sovf)
   }
 }

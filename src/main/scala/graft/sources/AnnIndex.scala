@@ -303,7 +303,8 @@ object AnnIndex {
     // Cached frames are the parquet READ-BACK, not the model's in-memory
     // plans — a fresh build's centroids carry the whole k-means lineage,
     // and caching those would re-train the quantizer on every append.
-    val key = s"${sessionId(spark)}|$dir|${md5Hex(metaTextAt(fs(spark, path), dir))}"
+    val f = fs(spark, path)
+    val key = quantizerKey(spark, f, dir, metaTextAt(f, dir))
     quantizerCache.put(key, (bornMeta,
       spark.read.parquet(s"$dir/centroids"),
       bornMeta.pq.map(_ => spark.read.parquet(s"$dir/codebook"))))
@@ -366,21 +367,10 @@ object AnnIndex {
       throw new IllegalArgumentException(s"no complete ANN-index versions at $path"))
     val dir = s"$path/version=$v"
     val f = fs(spark, path)
-    val meta = metaAt(f, dir)
-    require(meta.formatVersion == FormatVersion,
-      s"ANN index at $dir has format_version ${meta.formatVersion}; this " +
-        s"reader supports $FormatVersion")
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    require(centroids.columns.sorted.toSeq == Seq("cell_id", "cvec"),
-      s"centroids at $dir have columns ${centroids.columns.toSeq}, want (cell_id, cvec)")
-    // quantizer-sized collects only (numCells rows): count, dim uniformity
-    val centStats = centroids
-      .agg(count(lit(1)), count_distinct(size(col("cvec"))), min(size(col("cvec"))))
-      .head()
-    require(centStats.getLong(0) >= 1 && centStats.getLong(0) <= meta.numCells,
-      s"centroids at $dir: ${centStats.getLong(0)} rows, want 1..${meta.numCells}")
-    require(centStats.getLong(1) == 1 && centStats.getInt(2) == meta.dim,
-      s"centroids at $dir are not uniformly ${meta.dim}-dimensional")
+    // meta, centroids and codebook come validated from the quantizer cache
+    // (one `_META.json` read on a hit); the postings, codes and tombstones
+    // below are validated on every read
+    val (meta, centroids, codebook) = readQuantizer(spark, path, v)
     // read with the STORED schema (see Meta.cellsSchemaJson): exact types —
     // partition-directory inference would type cell_id int — and partition
     // filters land on the raw column, so directory pruning works
@@ -392,31 +382,13 @@ object AnnIndex {
         Seq(meta.idCol, "cell_id", meta.vecCol).sorted,
       s"cells at $dir have columns ${cells.columns.toSeq}, want " +
         s"(${meta.idCol}, cell_id, ${meta.vecCol})")
-    val (codebook, codes) = meta.pq match {
+    val codes = meta.pq match {
       case None =>
         require(!f.exists(hp(s"$dir/codebook")) && !f.exists(hp(s"$dir/codes")) &&
             !f.exists(hp(s"$dir/${codesDirName(meta.postingsGen)}")),
           s"non-PQ index at $dir has stray codebook/codes directories")
-        (None, None)
-      case Some(pq) =>
-        val cb = spark.read.parquet(s"$dir/codebook")
-        require(cb.columns.sorted.toSeq == Seq("cid", "cvec", "sub"),
-          s"codebook at $dir has columns ${cb.columns.toSeq}, want (sub, cid, cvec)")
-        // gap-free subspaces 0..m-1 — positional packing depends on it; a
-        // numSub-bounded collect (the tiny-model rule). The EXACT expected
-        // count is derivable from (dim, numSub) — pqSubs gives ceil(dim/
-        // numSub)-wide slices and drops empty trailing ones — so require
-        // equality, not <=: a codebook that lost its TRAILING subspace
-        // rows (truncated copy) is contiguous but short, and stored codes
-        // arrays would index past the search LUT (review r11)
-        val subW = (meta.dim + pq.numSub - 1) / pq.numSub
-        val expectedSubs = (0 until pq.numSub).count(s => s * subW < meta.dim)
-        val subsSeen = cb.select(col("sub").cast("int")).distinct()
-          .collect().map(_.getInt(0)).sorted
-        require(subsSeen.toSeq == (0 until expectedSubs),
-          s"codebook at $dir has subspaces ${subsSeen.toSeq}, want " +
-            s"0..${expectedSubs - 1} for dim ${meta.dim} × numSub ${pq.numSub} — " +
-            "truncated or corrupted artifact")
+        None
+      case Some(_) =>
         val cd = spark.read.parquet(s"$dir/${codesDirName(meta.postingsGen)}")
         require(cd.columns.sorted.toSeq == Seq("codes", "neighbor_id"),
           s"codes at $dir have columns ${cd.columns.toSeq}, want (neighbor_id, codes)")
@@ -441,7 +413,7 @@ object AnnIndex {
               "and codes writes; run repairTornAppend to re-encode the " +
               "missing code rows through the stored codebook")
         }
-        (Some(cb), Some(cd))
+        Some(cd)
     }
     // tombstones (r13): deletes are id tombstones scoped to the postings
     // generation — applied HERE, at read time, onto the returned frames,
@@ -489,25 +461,29 @@ object AnnIndex {
     * Structured Streaming ingest calls it from `foreachBatch` (spec:
     * StreamingSpec "streaming ANN ingest").
     */
-  /** The components [[append]] actually ROUTES THROUGH — meta, validated
-    * centroids, packed codebook when PQ — without listing or validating
-    * the postings (judge r11 #5: append() ran the FULL validating read per
-    * micro-batch, so a streaming ingest paid cells/codes directory
-    * listings and, on PQ indexes, two count jobs per batch just to load a
-    * numCells-row quantizer). Postings health stays adjudicated where it
-    * is consumed: [[read]] (every search/compact entry) still runs the
-    * complete validation, and a torn earlier append is still caught there
-    * and repaired via [[repairTornAppend]] — appending onto a torn index
-    * only ADDS healthy (cells, codes) pairs, it cannot widen the tear.
+  /** The validated quantizer — meta, centroids, codebook when PQ — that
+    * [[append]] routes through and [[read]] returns, without listing or
+    * validating the postings (judge r11 #5: append() ran the FULL
+    * validating read per micro-batch, so a streaming ingest paid
+    * cells/codes directory listings and, on PQ indexes, two count jobs per
+    * batch just to load a numCells-row quantizer). Postings health stays
+    * adjudicated where it is consumed: [[read]] (every search/compact
+    * entry) still validates postings, codes and tombstones on every call,
+    * and a torn earlier append is still caught there and repaired via
+    * [[repairTornAppend]] — appending onto a torn index only ADDS healthy
+    * (cells, codes) pairs, it cannot widen the tear.
     */
-  /** Validated quantizers by (session UUID, version dir, `_META.json`
-    * content digest). Sound because a version's quantizer is IMMUTABLE by
-    * contract ([[write]] refuses existing versions): the only legitimate
-    * way the quantizer at a (path, version) changes is deleting the
-    * directory and re-writing it, which replaces `_META.json` — and the
-    * md5 of the file's CONTENT is part of the key, so that case misses
-    * cleanly at the cost of ONE small file read per append instead of a
-    * centroid read + validation job per micro-batch. Access-order LRU
+  /** Validated quantizers by (session UUID, version dir, digest of the
+    * `_META.json` content and of the centroids/codebook part-file names).
+    * Sound because a version's quantizer is IMMUTABLE by contract
+    * ([[write]] refuses existing versions): the only legitimate way the
+    * quantizer at a (path, version) changes is deleting the directory and
+    * re-writing it. A deterministic rebuild rewrites a byte-identical
+    * `_META.json`, but its part files carry the new write job's UUID in
+    * their names, so that case misses cleanly and no cached frame lists
+    * deleted files — at the cost of ONE small file read and two listings
+    * per append or read instead of a centroid read + validation job.
+    * Access-order LRU
     * bounded at 64 entries — EVERY put (including [[write]]'s priming put)
     * goes through the bound, and eviction is per-entry eldest-out, not a
     * wholesale clear that would evict every session's entries at once.
@@ -521,12 +497,19 @@ object AnnIndex {
           size > QuantizerCacheMax
       })
 
+  private def quantizerKey(spark: SparkSession, f: org.apache.hadoop.fs.FileSystem,
+                           dir: String, metaText: String): String = {
+    val parts = Seq("centroids", "codebook").filter(c => f.exists(hp(s"$dir/$c")))
+      .flatMap(c => f.listStatus(hp(s"$dir/$c")).map(_.getPath.getName).sorted)
+    s"${sessionId(spark)}|$dir|${md5Hex(parts.mkString(metaText, "/", ""))}"
+  }
+
   private def readQuantizer(spark: SparkSession, path: String, version: String)
       : (Meta, DataFrame, Option[DataFrame]) = {
     val dir = s"$path/version=$version"
     val f = fs(spark, path)
     val metaText = metaTextAt(f, dir)
-    val key = s"${sessionId(spark)}|$dir|${md5Hex(metaText)}"
+    val key = quantizerKey(spark, f, dir, metaText)
     val cached = quantizerCache.get(key)
     if (cached != null) return cached
     val meta = parseMeta(metaText, dir)
@@ -536,8 +519,7 @@ object AnnIndex {
     val centroids = spark.read.parquet(s"$dir/centroids")
     require(centroids.columns.sorted.toSeq == Seq("cell_id", "cvec"),
       s"centroids at $dir have columns ${centroids.columns.toSeq}, want (cell_id, cvec)")
-    // same quantizer-sized validation as read(): the components this path
-    // USES are validated exactly as hard there
+    // quantizer-sized collects only (numCells rows): count, dim uniformity
     val centStats = centroids
       .agg(count(lit(1)), count_distinct(size(col("cvec"))), min(size(col("cvec"))))
       .head()
@@ -549,6 +531,21 @@ object AnnIndex {
       val cb = spark.read.parquet(s"$dir/codebook")
       require(cb.columns.sorted.toSeq == Seq("cid", "cvec", "sub"),
         s"codebook at $dir has columns ${cb.columns.toSeq}, want (sub, cid, cvec)")
+      // gap-free subspaces 0..m-1 — positional packing depends on it; a
+      // numSub-bounded collect (the tiny-model rule). The EXACT expected
+      // count is derivable from (dim, numSub) — pqSubs gives ceil(dim/
+      // numSub)-wide slices and drops empty trailing ones — so require
+      // equality, not <=: a codebook that lost its TRAILING subspace
+      // rows (truncated copy) is contiguous but short, and stored codes
+      // arrays would index past the search LUT (review r11)
+      val subW = (meta.dim + pq.numSub - 1) / pq.numSub
+      val expectedSubs = (0 until pq.numSub).count(s => s * subW < meta.dim)
+      val subsSeen = cb.select(col("sub").cast("int")).distinct()
+        .collect().map(_.getInt(0)).sorted
+      require(subsSeen.toSeq == (0 until expectedSubs),
+        s"codebook at $dir has subspaces ${subsSeen.toSeq}, want " +
+          s"0..${expectedSubs - 1} for dim ${meta.dim} × numSub ${pq.numSub} — " +
+          "truncated or corrupted artifact")
       cb
     }
     // the LRU bound lives in the map itself (removeEldestEntry) — no

@@ -54,9 +54,10 @@ object Writers {
     deleteRecursively(tmpOld)
     deleteRecursively(stagingDir)
     val merged =
-      if (Files.exists(dir))
-        spark.read.parquet(path).unionByName(updates.select(spark.read.parquet(path).columns.map(col).toIndexedSeq: _*))
-      else updates
+      if (Files.exists(dir)) {
+        val current = spark.read.parquet(path)
+        current.unionByName(updates.select(current.columns.map(col).toIndexedSeq: _*))
+      } else updates
     val latest = graft.operators.Relational.latestPerKey(merged, keys.map(col), version)
     latest.write.mode("overwrite").parquet(stagingDir.toString)
     if (Files.exists(dir)) {

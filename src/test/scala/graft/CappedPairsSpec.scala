@@ -18,7 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  3. the df counts every row while storage skips NULL ids (count/
   *     collect_list parity with the old shape);
   *  4. a bucket at EXACTLY the cap is kept complete (off-by-one at the
-  *     boundary is the classic regression here).
+  *     boundary is the classic regression here);
+  *  5. a cap below 1 keeps no shingle, so the pair set is empty (the
+  *     one-pass aggregate needs maxDf >= 1 and is not used for it).
   */
 class CappedPairsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -139,5 +141,20 @@ class CappedPairsSpec extends AnyFunSuite {
       "no bucket is over cap 50 here, so capped == uncapped containment")
     assert(onePass.exists { case (a, b, c) => a == 1L && b == 2L && c == 1.0 },
       "the quoted subset must score containment 1.0")
+  }
+
+  test("a cap below 1 keeps no shingle: both capped families return no pairs") {
+    val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e f"), (3L, "a b c d e g"))
+      .toDF("doc_id", "text")
+    for (cap <- Seq(0L, -1L)) {
+      val jac = graft.operators.Dedup
+        .ngramJaccardPairsCapped(docs, $"doc_id", $"text", 3, 0.0, maxDocFreq = cap)
+      assert(jac.columns.toSeq == Seq("doc_a", "doc_b", "jaccard"))
+      assert(jac.collect().isEmpty, s"maxDocFreq = $cap must yield no jaccard pairs")
+      val cont = graft.operators.Dedup
+        .ngramContainmentPairs(docs, $"doc_id", $"text", 3, 0.0, maxDocFreq = cap)
+      assert(cont.columns.toSeq == Seq("doc_a", "doc_b", "containment"))
+      assert(cont.collect().isEmpty, s"maxDocFreq = $cap must yield no containment pairs")
+    }
   }
 }

@@ -17,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  3. correlationMatrix == the old decimal formulation on data WITH nulls
   *     (pairwise deletion) — r values bit-identical;
   *  4. overflow poisons to NULL (the decimal path's overflow-to-NULL
-  *     class), never a silently wrapped wrong value;
+  *     class), never a silently wrapped wrong value — also when a merged
+  *     partial's high word is Long.MaxValue and the low words carry;
   *  5. out-of-range |v| >= 1e(18-s) fails LOUDLY (the decimal cast
   *     silently NULLed such rows; the operators' range asserts made that
   *     an abort — the throw keeps the abort, earlier and clearer).
@@ -130,5 +131,28 @@ class ExactSum128Spec extends AnyFunSuite {
       if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("graft_double_to_scaled_long")),
       s"want the scaled-long range message in the failure chain, got: ${messages(e)}")
+  }
+
+  test("merging a partial whose high word is Long.MaxValue detects a carried overflow") {
+    // hi = Long.MaxValue plus a carry out of the low words wraps `bHi + carry`;
+    // the overflow predicate must read the true 128-bit sum, both ways
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BindReferences, Literal}
+    import org.apache.spark.sql.types.Decimal
+    val agg = graft.plans.Int128ProductSum(Literal(1L), Literal(1L), 0)
+    val mergeInput = agg.aggBufferAttributes ++ agg.inputAggBufferAttributes
+    val merge = agg.mergeExpressions.map(BindReferences.bindReference(_, mergeInput))
+    val result = BindReferences.bindReference(agg.evaluateExpression, agg.aggBufferAttributes)
+    // buffers are (hi, lo, seen, ovf); the value is hi·2^64 + unsigned lo
+    def merged(a: (Long, Long), b: (Long, Long)): Any = {
+      val in = InternalRow(a._1, a._2, true, false, b._1, b._2, true, false)
+      result.eval(InternalRow.fromSeq(merge.map(_.eval(in))))
+    }
+    // (2^127 - 2^64 - 1) + (2^127 - 2^64 + 1) = 2^128 - 2^65: overflow -> NULL
+    assert(merged((Long.MaxValue, -1L), (Long.MaxValue, 1L)) == null,
+      "a carried overflow past 2^127 must poison the sum to NULL")
+    // (-2^127 + 2^64 - 1) + (2^127 - 2^64 + 1) = 0: no overflow
+    assert(merged((Long.MinValue, -1L), (Long.MaxValue, 1L)) == Decimal(0),
+      "a carried sum back in range must not be flagged as overflow")
   }
 }
